@@ -28,11 +28,10 @@ from ..sources.rates import CURRENCY_ALPHABET
 WEEK_SECS = 7 * 86400
 
 
-def _uuid_like(col) -> F.Column:
-    """Deterministic UUID-format string from a unique id: md5 hex laid
+def _uuid_like(h: Column) -> Column:
+    """Deterministic UUID-format string from an md5 hex column, laid
     out 8-4-4-4-12. Replaces ``uuid.uuid4()`` (reference:
     dags/order_generator_dag.py:66) for reproducible golden tests."""
-    h = F.md5(col.cast("string"))
     return F.concat_ws(
         "-",
         F.substring(h, 1, 8),
@@ -69,7 +68,8 @@ def generate_orders(
     cents = _hash_slice(h1, 25) % 99000 + 1000
     cur_idx = (_hash_slice(h2, 1) % len(currencies) + 1).cast("int")
     return base.select(
-        _uuid_like(F.col("id")).alias("order_id"),
+        # md5(seed:id): distinct seeds give disjoint id sets
+        _uuid_like(h1).alias("order_id"),
         # email f"{letter}{digits}@example.com" (reference: order_generator_dag.py:67)
         F.concat(
             F.substring(F.lit("abcdefghijklmnopqrstuvwxyz"), letter_idx, 1),
@@ -103,13 +103,12 @@ WITH ids AS (
     SELECT CAST(range AS BIGINT) AS id FROM range({n})
 ), hashed AS (
     SELECT id,
-           md5(CAST(id AS VARCHAR)) AS hu,
            md5('{seed}' || ':' || CAST(id AS VARCHAR)) AS h1,
            md5('{seed}' || ':' || CAST(id AS VARCHAR) || ':' || 'b') AS h2
     FROM ids
 )
-SELECT concat_ws('-', substr(hu,1,8), substr(hu,9,4), substr(hu,13,4),
-                 substr(hu,17,4), substr(hu,21,12)) AS order_id,
+SELECT concat_ws('-', substr(h1,1,8), substr(h1,9,4), substr(h1,13,4),
+                 substr(h1,17,4), substr(h1,21,12)) AS order_id,
        substr('abcdefghijklmnopqrstuvwxyz',
               CAST({hex_to_long_sql('substr(h1,1,8)')} % 26 + 1 AS INT), 1)
          || CAST({hex_to_long_sql('substr(h1,9,8)')} % 9000 + 1000 AS VARCHAR)

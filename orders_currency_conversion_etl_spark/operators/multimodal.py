@@ -861,6 +861,108 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
+# Palette decode tier (r14): the pure GIF LZW codec (gif_codec.py) and
+# the palette/Adam7/sub-byte branch of decode_png, each pinned directly
+# to its codec. Both queries share one fixture convention: a 4-entry
+# palette from md5(text)'s first 12 ascii-hex chars, pixel p ->
+# palette[p % 4] with w % 4 == 0 — so the decoded RGB stream is the
+# 12-char block repeated w*h/4 times, SQL-reconstructable, and the md5
+# proves decode + deinterlace + palette map byte-for-byte (dims/mode
+# alone would pass on a header-only walk).
+# --------------------------------------------------------------------------
+
+_PALETTE_DECODE_ORACLE = """
+SELECT doc_id,
+       CAST(4 * (1 + doc_id % 6) AS INT) AS width,
+       CAST(3 + doc_id % 11 AS INT) AS height,
+       'RGB' AS mode,
+       md5(repeat(substr(md5(text), 1, 12),
+                  (4 * (1 + doc_id % 6)) * (3 + doc_id % 11) // 4))
+           AS pixels_md5
+FROM documents
+"""
+
+
+def _palette_roundtrip(spark: SparkSession, sf_dir: str, roundtrip) -> DataFrame:
+    """Per document, build the palette fixture's index stream and pass
+    ``(doc_id, w, h, indices, palette12)`` to ``roundtrip``, which
+    encodes and decodes it to ``(w, h, mode, rgb)``; emit the decoded
+    pixels' md5. One mapInPandas stage, no shuffle at any scale."""
+    import hashlib
+
+    docs = catalog.load_table(spark, sf_dir, "documents")
+    base = docs.select(
+        "doc_id",
+        (F.lit(4) * (F.lit(1) + F.col("doc_id") % 6)).cast("int").alias("w"),
+        (F.lit(3) + F.col("doc_id") % 11).cast("int").alias("h"),
+        F.substring(F.md5(F.col("text")), 1, 12).alias("pal12"),
+    )
+
+    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for doc_id, w, h, pal12 in zip(
+                pdf["doc_id"], pdf["w"], pdf["h"], pdf["pal12"]
+            ):
+                w, h = int(w), int(h)
+                idx = bytes(p % 4 for p in range(w * h))
+                gw, gh, mode, rgb = roundtrip(
+                    doc_id, w, h, idx, pal12.encode("ascii")
+                )
+                rows.append((doc_id, gw, gh, mode, hashlib.md5(rgb).hexdigest()))
+            yield pd.DataFrame(
+                rows, columns=[f.name for f in PNG_DECODE_SCHEMA.fields]
+            )
+
+    return base.mapInPandas(_batches, schema=PNG_DECODE_SCHEMA)
+
+
+def _gif_roundtrip(doc_id, w: int, h: int, idx: bytes, pal: bytes):
+    from .gif_codec import decode_gif, encode_gif
+
+    gif = encode_gif(
+        w, h, idx, pal, interlace=bool(doc_id % 2), loop_extension=(doc_id % 3 == 0)
+    )
+    return decode_gif(gif)
+
+
+def _png_palette_roundtrip(doc_id, w: int, h: int, idx: bytes, pal: bytes):
+    png = encode_png(
+        w,
+        h,
+        idx,
+        cycle_filters=(doc_id % 5 != 0),
+        colortype=3,
+        bitdepth=2,
+        palette=pal,
+        interlace=bool(doc_id % 2),
+    )
+    return decode_png(png)
+
+
+@query("multimodal_gif_decode", _PALETTE_DECODE_ORACLE)
+def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """L4 GIF pixel decode with zero native deps: synthesize a real
+    GIF89a per document executor-side — 4-color global palette keyed
+    on md5(text), real LZW compression, odd doc_ids interlaced, every
+    third stream carrying a NETSCAPE extension — then decode through
+    the pure codec (:mod:`operators.gif_codec`), not the PIL-preferring
+    :func:`decode_image_pixels` dispatch: the query verifies the codec
+    itself, the PNG/JPEG convention."""
+    return _palette_roundtrip(spark, sf_dir, _gif_roundtrip)
+
+
+@query("multimodal_png_palette_decode", _PALETTE_DECODE_ORACLE)
+def multimodal_png_palette_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """L4 palette/interlace PNG decode with zero native deps: a REAL
+    colortype-3 bitdepth-2 PNG per document (4-color PLTE keyed on
+    md5(text), Adam7 on odd doc_ids, cycling scanline filters on most),
+    decoded through :func:`decode_png` directly — inflate, unfilter,
+    sub-byte unpack, deinterlace and palette map under one hash."""
+    return _palette_roundtrip(spark, sf_dir, _png_palette_roundtrip)
+
+
+# --------------------------------------------------------------------------
 # The compressed-format decode path (PIL when present, PPM fallback)
 # --------------------------------------------------------------------------
 
@@ -1991,6 +2093,67 @@ def multimodal_ogg_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.mapInPandas(_roundtrip, schema=OGG_INFO_SCHEMA)
 
 
+# sample_rate cycles the MPEG-1 Layer-III legal set so ONE stripe
+# formula covers every container; channels alternate mono/stereo.
+_AUDIO_INFO_ORACLE = """
+SELECT doc_id,
+       CASE CAST(doc_id % 4 AS INT)
+            WHEN 0 THEN CASE CAST(strlen(text) % 3 AS INT)
+                             WHEN 0 THEN 'pcm16'
+                             WHEN 1 THEN 'float32'
+                             ELSE 'mulaw' END
+            WHEN 1 THEN CASE WHEN strlen(text) % 2 = 0
+                             THEN 'vorbis' ELSE 'opus' END
+            WHEN 2 THEN 'flac'
+            ELSE 'mp3'
+       END AS codec,
+       CAST(1 + strlen(text) % 2 AS INT) AS channels,
+       CAST(CASE CAST(strlen(text) % 3 AS INT)
+                 WHEN 0 THEN 44100 WHEN 1 THEN 48000 ELSE 32000
+            END AS INT) AS sample_rate
+FROM documents
+"""
+
+
+@query("multimodal_audio_info", _AUDIO_INFO_ORACLE)
+def multimodal_audio_info(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unified audio info through :func:`audio_info`, cycling containers
+    on ``doc_id % 4``: WAV fmt-chunk walk (all three supported tags),
+    OGG Vorbis/Opus identification pages, FLAC STREAMINFO
+    bit-unpacking, MP3 frame header behind an ID3v2 syncsafe skip —
+    every branch's parse under one value hash. One mapInPandas stage,
+    no shuffle at any scale."""
+    docs = catalog.load_table(spark, sf_dir, "documents")
+    base = docs.select("doc_id", "text")
+
+    def _info(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                doc_id = int(doc_id)
+                n = len(text)
+                ch = 1 + n % 2
+                rate = (44100, 48000, 32000)[n % 3]
+                if doc_id % 4 == 0:
+                    fmt = ("pcm16", "float32", "mulaw")[n % 3]
+                    payload = encode_wav(rate, [0, 1] * ch, ch, fmt)
+                elif doc_id % 4 == 1:
+                    payload = encode_ogg_id_page(
+                        "vorbis" if n % 2 == 0 else "opus", ch, rate
+                    )
+                elif doc_id % 4 == 2:
+                    payload = encode_flac_header(ch, rate)
+                else:
+                    payload = encode_mp3_header(ch, rate, id3_size=(n % 7) * 3)
+                rows.append((doc_id, *audio_info(payload)))
+            yield pd.DataFrame(
+                rows, columns=["doc_id", "codec", "channels", "sample_rate"]
+            )
+
+    # same (doc_id, codec, channels, sample_rate) shape as the OGG query
+    return base.mapInPandas(_info, schema=OGG_INFO_SCHEMA)
+
+
 # --------------------------------------------------------------------------
 # MP4 / ISO-BMFF header dims (r13, VERDICT r12 ask #3): the dominant
 # video container joins the header-only family. A stdlib box walk to
@@ -2509,6 +2672,78 @@ def multimodal_mp4_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.mapInPandas(_roundtrip, schema=MP4_DIMS_SCHEMA)
 
 
+VIDEO_DIMS_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("container", T.StringType()),
+        T.StructField("width", T.IntegerType()),
+        T.StructField("height", T.IntegerType()),
+        T.StructField("duration_ms", T.LongType()),
+    ]
+)
+
+# Every container stripe encodes duration_ms = 1000 * k with
+# k = 1 + strlen % 120 (MP4: k x timescale ticks; AVI: 50k frames at
+# 20 ms; MKV: float64 1000k ticks at the default TimestampScale), so
+# one expression covers all three branches; the container label is the
+# dispatch's own report (ftyp brand / "avi" / EBML DocType).
+_VIDEO_DIMS_ORACLE = """
+SELECT doc_id,
+       CASE CAST(doc_id % 3 AS INT)
+            WHEN 0 THEN 'isom'
+            WHEN 1 THEN 'avi'
+            ELSE CASE WHEN strlen(text) % 2 = 0
+                      THEN 'webm' ELSE 'matroska' END
+       END AS container,
+       CAST(1 + strlen(text) % 640 AS INT) AS width,
+       CAST(1 + (strlen(text) // 7) % 480 AS INT) AS height,
+       CAST(1000 * (1 + strlen(text) % 120) AS BIGINT) AS duration_ms
+FROM documents
+"""
+
+
+@query("multimodal_video_dims", _VIDEO_DIMS_ORACLE)
+def multimodal_video_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unified video dims through :func:`video_dims`, cycling MP4 / AVI
+    / MKV on ``doc_id % 3``: MP4 (version-0/1 mvhd+tkhd on a length
+    stripe, largesize moov on a fifth stripe, leading zero-dims audio
+    trak), AVI (RIFF hdrl walk with a JUNK sub-chunk), MKV (webm/
+    matroska DocType, leading audio TrackEntry, streamed unknown-size
+    Segment on a third stripe) — every branch's parse and the sniffing
+    dispatch itself under one value hash. One mapInPandas stage,
+    O(header) per payload, no shuffle at any scale."""
+    docs = catalog.load_table(spark, sf_dir, "documents")
+    base = docs.select("doc_id", "text")
+
+    def _dims(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                doc_id = int(doc_id)
+                n = len(text)
+                w, h, k = 1 + n % 640, 1 + (n // 7) % 480, 1 + n % 120
+                if doc_id % 3 == 0:
+                    ts = 90_000 if n % 2 else 48_000
+                    payload = encode_mp4_header(
+                        "isom", w, h, k * ts, ts,
+                        version=n % 2, large_moov=(n % 5 == 0),
+                    )
+                elif doc_id % 3 == 1:
+                    payload = encode_avi_header(w, h, 50 * k, 20_000)
+                else:
+                    payload = encode_mkv_header(
+                        "webm" if n % 2 == 0 else "matroska",
+                        w, h, 1000.0 * k,
+                        unknown_size_segment=(n % 3 == 0),
+                    )
+                rows.append((doc_id, *video_dims(payload)))
+            yield pd.DataFrame(
+                rows, columns=[f.name for f in VIDEO_DIMS_SCHEMA.fields]
+            )
+
+    return base.mapInPandas(_dims, schema=VIDEO_DIMS_SCHEMA)
+
+
 # --------------------------------------------------------------------------
 # TIFF header dims (r13, VERDICT r12 "What's missing" #4 continuation):
 # an IFD tag walk in both byte orders — TIFF is the remaining common
@@ -2694,3 +2929,119 @@ def multimodal_tiff_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     return base.mapInPandas(_roundtrip, schema=TIFF_DIMS_SCHEMA)
+
+
+# --------------------------------------------------------------------------
+# Header-only image dispatch over netpbm / ICO / BMP / HEIF: every
+# branch O(header), pixel bytes never synthesized beyond a placeholder.
+# --------------------------------------------------------------------------
+
+IMAGE_DIMS_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("width", T.IntegerType()),
+        T.StructField("height", T.IntegerType()),
+        T.StructField("mode", T.StringType()),
+    ]
+)
+
+_IMAGE_DIMS_ORACLE = """
+SELECT doc_id,
+       CAST(CASE WHEN doc_id % 4 = 1
+                 THEN CASE WHEN strlen(text) % 9 = 0
+                           THEN 256 ELSE 1 + strlen(text) % 255 END
+                 ELSE 1 + strlen(text) % 300 END AS INT) AS width,
+       CAST(CASE WHEN doc_id % 4 = 1
+                 THEN CASE WHEN strlen(text) % 9 = 0
+                           THEN 256 ELSE 1 + (strlen(text) // 3) % 255 END
+                 ELSE 1 + (strlen(text) // 7) % 200 END AS INT) AS height,
+       CASE CAST(doc_id % 4 AS INT)
+            WHEN 0 THEN CASE CAST(strlen(text) % 3 AS INT)
+                             WHEN 0 THEN '1' WHEN 1 THEN 'L' ELSE 'RGB' END
+            WHEN 1 THEN 'RGBA'
+            WHEN 2 THEN CASE CAST(strlen(text) % 3 AS INT)
+                             WHEN 0 THEN 'RGB' WHEN 1 THEN 'RGBA' ELSE 'P' END
+            ELSE 'RGB'
+       END AS mode
+FROM documents
+"""
+
+
+def _ico_bytes(w: int, h: int) -> bytes:
+    """Two-entry ICONDIR: a 1x1 thumb + the (w, h) primary — the
+    largest-entry selection and the 0-means-256 quirk both live in
+    the entry bytes (256 encodes as 0)."""
+    import struct
+
+    def entry(ew: int, eh: int) -> bytes:
+        return struct.pack("<BBBBHHII", ew % 256, eh % 256, 0, 0, 1, 32, 16, 22)
+
+    return struct.pack("<HHH", 0, 1, 2) + entry(1, 1) + entry(w, h)
+
+
+def _bmp_bytes(w: int, h: int, bpp: int, topdown: bool) -> bytes:
+    """BITMAPFILEHEADER + BITMAPINFOHEADER (40), no pixel data — the
+    dims walk never reads past the header."""
+    import struct
+
+    info = struct.pack(
+        "<IiiHHIIiiII", 40, w, -h if topdown else h, 1, bpp, 0, 0, 0, 0, 0, 0
+    )
+    file_hdr = b"BM" + struct.pack("<IHHI", 14 + 40, 0, 0, 14 + 40)
+    return file_hdr + info
+
+
+def _pnm_bytes(kind: int, w: int, h: int) -> bytes:
+    """P4/P5 header with a comment line (pnm_dims' token-scan skip
+    branch) and a placeholder pixel byte; P6 stays comment-free —
+    ``image_dims`` routes ``P6\\n`` to the STRICT ppm parser, which
+    per its contract takes the plain ``P6/W H/MAX`` layout only."""
+    comment = "" if kind == 6 else "# fixture\n"
+    return (
+        f"P{kind}\n{comment}{w} {h}\n".encode()
+        + (b"" if kind == 4 else b"255\n")
+        + b"\x00"
+    )
+
+
+@query("multimodal_image_dims", _IMAGE_DIMS_ORACLE)
+def multimodal_image_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Header-only dims through :func:`image_dims`, cycling families on
+    ``doc_id % 4``: netpbm (comment-tolerant token scan), ICO (largest
+    directory entry + 256 quirk on a ninth stripe), BMP (info header,
+    24/32/8 bpp, top-down negative height on an odd stripe), HEIF/AVIF
+    (ispe walk with a thumbnail entry to skip). One mapInPandas stage,
+    no shuffle at any scale."""
+    docs = catalog.load_table(spark, sf_dir, "documents")
+    base = docs.select("doc_id", "text")
+
+    def _dims(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                doc_id = int(doc_id)
+                n = len(text)
+                if doc_id % 4 == 1:
+                    if n % 9 == 0:
+                        w = h = 256
+                    else:
+                        w, h = 1 + n % 255, 1 + (n // 3) % 255
+                    payload = _ico_bytes(w, h)
+                else:
+                    w, h = 1 + n % 300, 1 + (n // 7) % 200
+                    if doc_id % 4 == 0:
+                        payload = _pnm_bytes((4, 5, 6)[n % 3], w, h)
+                    elif doc_id % 4 == 2:
+                        payload = _bmp_bytes(
+                            w, h, (24, 32, 8)[n % 3], topdown=(n % 2 == 1)
+                        )
+                    else:
+                        payload = encode_heif_header(
+                            "heic" if n % 2 == 0 else "avif", [(1, 1), (w, h)]
+                        )
+                rows.append((doc_id, *image_dims(payload)))
+            yield pd.DataFrame(
+                rows, columns=[f.name for f in IMAGE_DIMS_SCHEMA.fields]
+            )
+
+    return base.mapInPandas(_dims, schema=IMAGE_DIMS_SCHEMA)

@@ -17,12 +17,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import schemas
+from .. import schemas, state_cache
 
 TABLE_NAMES = tuple(schemas.TABLES)
 
 
-#: (applicationId, abspath(sf_dir), name, variant) -> analyzed DataFrame.
+#: (applicationId, *key) -> analyzed DataFrame. For tables the key is
+#: (abspath(sf_dir), name, variant, source digest).
 #: A DataFrame is an immutable lazy plan — memoizing it reuses the
 #: file listing + parquet-footer schema read (a ~75-115 ms DRIVER-side
 #: cost per spark.read.parquet, measured r18; the headline bench pays
@@ -33,13 +34,15 @@ TABLE_NAMES = tuple(schemas.TABLES)
 #: applicationId so a new session (partition-invariance audits, fresh
 #: driver processes) never sees another session's plans; entries from
 #: a previous application are dropped on first access from a new one.
-_PLAN_MEMO: dict[tuple[str, str, str, str], DataFrame] = {}
+#: The source digest (state_cache.source_digest: every part file's
+#: name, mtime and size) makes a table appended to or rewritten within
+#: one session miss the memo instead of serving a plan whose file
+#: listing is stale.
+_PLAN_MEMO: dict[tuple[str, ...], DataFrame] = {}
 
 
-def session_memo(spark: SparkSession, key: tuple[str, str, str], build) -> DataFrame:
+def session_memo(spark: SparkSession, key: tuple[str, ...], build) -> DataFrame:
     """Memoize an analyzed (lazy, data-free) DataFrame per session."""
-    if os.environ.get("SPARK_GRAFT_NO_PLAN_MEMO") == "1":
-        return build()
     app = spark.sparkContext.applicationId
     full = (app, *key)
     df = _PLAN_MEMO.get(full)
@@ -51,18 +54,23 @@ def session_memo(spark: SparkSession, key: tuple[str, str, str], build) -> DataF
     return df
 
 
+def _table_key(sf_dir: str, name: str, variant: str) -> tuple[str, ...]:
+    if name not in schemas.TABLES:
+        raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    return (os.path.abspath(sf_dir), name, variant, state_cache.source_digest(path))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one synthetic table; schema is validated, never inferred."""
     return session_memo(
         spark,
-        (os.path.abspath(sf_dir), name, "plain"),
+        _table_key(sf_dir, name, "plain"),
         lambda: _load_table_uncached(spark, sf_dir, name),
     )
 
 
 def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name not in schemas.TABLES:
-        raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         # events.ts has shipped as two parquet encodings across driver
@@ -114,7 +122,7 @@ def load_table_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFram
             df = df.repartition(target)
         return df
 
-    return session_memo(spark, (os.path.abspath(sf_dir), name, "parallel"), build)
+    return session_memo(spark, _table_key(sf_dir, name, "parallel"), build)
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES) -> None:

@@ -28,9 +28,27 @@ import errno
 import hashlib
 import os
 import shutil
+import stat
 from collections.abc import Callable
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def source_digest(src: str) -> str:
+    """md5 hex over EVERY part file's (name, mtime_ns, size) of a
+    table stored at ``src`` — a parquet directory or a single file. A
+    same-second same-size regeneration still changes mtime_ns on any
+    real filesystem, and adding/removing/renaming a part always
+    changes the digest. A single-file table costs one ``stat``."""
+    h = hashlib.md5()
+    st = os.stat(src)
+    if stat.S_ISDIR(st.st_mode):
+        for name in sorted(os.listdir(src)):
+            part = os.stat(os.path.join(src, name))
+            h.update(f"{name}:{part.st_mtime_ns}:{part.st_size};".encode())
+    else:
+        h.update(f"{os.path.basename(src)}:{st.st_mtime_ns}:{st.st_size};".encode())
+    return h.hexdigest()
 
 
 def fingerprint_path(
@@ -45,28 +63,18 @@ def fingerprint_path(
     ``source_table`` (e.g. ``lineitem``): root from ``env_var`` or
     ``.localdata/<subdir>``, leaf ``<prefix>_<dirtag>_<srcfp>[_<deriv>]``.
 
-    ``srcfp`` hashes EVERY part-file's (name, mtime_ns, size) — a
-    same-second same-size regeneration still changes mtime_ns on any
-    real filesystem, and adding/removing/renaming a part always
-    changes the digest. ``derivation`` is the caller's token for the
+    ``srcfp`` is :func:`source_digest` of the source table.
+    ``derivation`` is the caller's token for the
     parameters/code-version the state depends on (e.g. the centroid
     stride), so tuning a constant invalidates the cache instead of
     silently serving state built under the old value.
     """
     root = os.environ.get(env_var) or os.path.join(_REPO_ROOT, ".localdata", subdir)
     src = os.path.join(sf_dir, f"{source_table}.parquet")
-    h = hashlib.md5()
-    if os.path.isdir(src):
-        for name in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, name))
-            h.update(f"{name}:{st.st_mtime_ns}:{st.st_size};".encode())
-    else:
-        st = os.stat(src)
-        h.update(f"{os.path.basename(src)}:{st.st_mtime_ns}:{st.st_size};".encode())
     # md5, not hash(): str hashing is per-process randomized, which
     # would defeat cross-process cache reuse.
     dir_tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    leaf = f"{prefix}_{dir_tag}_{h.hexdigest()[:16]}"
+    leaf = f"{prefix}_{dir_tag}_{source_digest(src)[:16]}"
     if derivation:
         leaf += "_" + hashlib.md5(derivation.encode()).hexdigest()[:10]
     return os.path.join(root, leaf)

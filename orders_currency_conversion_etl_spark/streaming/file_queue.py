@@ -1040,3 +1040,48 @@ def queue_lag_report_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema.fields + [T.StructField("partition", T.IntegerType())]
     )
     return queue_lag_report(spark, q_dir, ckpt, full_schema)
+
+
+_QUEUE_SOURCE_ORACLE = """
+SELECT CAST(o_orderkey % 2 AS INT) AS partition,
+       COUNT(*) AS n_orders,
+       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2))
+           AS total_price
+FROM orders
+GROUP BY 1
+"""
+
+
+@query("queue_source_roundtrip", _QUEUE_SOURCE_ORACLE)
+def queue_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Orders written INTO a queue through the native
+    ``df.write.format("orders_queue")`` writer (driver-commit offset
+    assignment) and read back through the native reader (engine-
+    visible offsets, arrow record batches), then aggregated per queue
+    partition — the whole Python DataSource surface
+    (streaming/queue_source.py) under one exact oracle. Eager staging
+    in a scratch dir (the flagship_queue_drain pattern); at scale the
+    identical plan runs against a persistent broker volume."""
+    from pyspark.sql import functions as F
+
+    from ..sources import catalog
+    from .queue_source import register_queue_source
+
+    register_queue_source(spark)
+    q = _scratch_dir("queue_source_rt_")
+    orders = catalog.load_table(spark, sf_dir, "orders")
+    (
+        orders.withColumn("partition", (F.col("o_orderkey") % 2).cast("int"))
+        .repartition(4)
+        .write.format("orders_queue")
+        .mode("append")
+        .option("path", q)
+        .save()
+    )
+    back = spark.read.format("orders_queue").option("path", q).load()
+    return back.groupBy("partition").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+        .cast("decimal(18,2)")
+        .alias("total_price"),
+    )

@@ -33,9 +33,8 @@ object-store boundary; reads themselves are pyarrow over local paths).
 
 Reference parity: none — the reference's "stream" is an hourly cron
 re-run (reference: dags/order_currency_conversion_dag.py:14); this is
-EXT surface. Registration of a driver-oracled query over this source
-is queued for the r15 rotation slot (the r14 window is exactly filled
-by the due r9 staleness cohort).
+EXT surface. The registered query over this source is
+``queue_source_roundtrip`` (streaming/file_queue.py).
 """
 
 from __future__ import annotations

@@ -2,7 +2,15 @@
 query at sf0.001, annotated with the scan-level evidence that the
 scale properties hold (pushed filters, read schemas, join strategies).
 
-Run from the repo root:  python scripts/dump_plans.py
+With ``--out DIR TAG``, instead write the full ``.explain("formatted")``
+of each named query (default: the headline set) to
+``DIR/<query>_<TAG>.txt`` at $SPARK_GRAFT_SF_DIR (default: the sf0.1
+fixture beside ``SF_DIR``) — the before/after plan evidence of an
+optimization change (plans/r18, plans/r19).
+
+Run from the repo root:
+    python scripts/dump_plans.py
+    python scripts/dump_plans.py --out plans/r19 before [query ...]
 """
 
 from __future__ import annotations
@@ -125,5 +133,27 @@ def main() -> None:
     spark.stop()
 
 
+def dump_formatted(out_dir: str, tag: str, names: "list[str]") -> None:
+    sf_dir = os.environ.get(
+        "SPARK_GRAFT_SF_DIR", os.path.join(os.path.dirname(SF_DIR), "sf0.1")
+    )
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark("dump_plans")
+    spark.sparkContext.setLogLevel("ERROR")
+    for name in names or bench.HEADLINE:
+        df = registry.QUERIES[name](spark, sf_dir)
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        with open(path, "w") as fh:
+            fh.write(plan)
+        print(f"wrote {path} ({plan.count('Exchange')} Exchange mentions)")
+    spark.stop()
+
+
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:2] == ["--out"]:
+        dump_formatted(sys.argv[2], sys.argv[3], sys.argv[4:])
+    else:
+        main()

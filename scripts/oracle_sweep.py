@@ -9,14 +9,24 @@ compare (tests/oracle_harness.compare_query: full sorted stringified
 rows, not a hash) and writes one summary JSON whose committed copy is
 the recorded evidence (VERDICT r3 ask #3).
 
+Next to each query's ``status`` the summary records ``rows`` and
+``digest``: the row count of the Spark output and the md5 of its
+canonical row multiset (column-name-sorted cells, rows sorted — the
+compare's own canonical form), so the digest does not depend on row
+order or partitioning. Two sweeps of the same scale factor taken
+before and after a refactor prove it changed no query's output
+(``python scripts/oracle_sweep.py --compare A.json B.json``).
+
 Usage:
     python scripts/oracle_sweep.py [out.json]
+    python scripts/oracle_sweep.py --compare before.json after.json
     SPARK_GRAFT_SWEEP_DIR=/root/repo/.localdata/sf1 \
         SPARK_GRAFT_SWEEP_ONLY=q1,q2 python scripts/oracle_sweep.py
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import sys
@@ -25,11 +35,6 @@ import traceback
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-import __spark_entry__ as entry_mod  # noqa: E402
-
-from orders_currency_conversion_etl_spark.session import get_spark  # noqa: E402
-from tests.oracle_harness import compare_query  # noqa: E402
 
 #: The documented sf1+ exclusion set (r10, VERDICT r9 ask #7 made it
 #: canonical instead of an ad-hoc env var per run): the O(n^2)
@@ -49,7 +54,42 @@ SF1_SKIP = frozenset(
 )
 
 
+def _digest(canonical_rows: list[str]) -> str:
+    return hashlib.md5("\n".join(canonical_rows).encode()).hexdigest()
+
+
+def compare(before_path: str, after_path: str) -> int:
+    """Print every query whose (rows, digest) differs between two sweeps
+    or that only one sweep has; exit 1 if any differ."""
+    with open(before_path) as f:
+        before = json.load(f)["results"]
+    with open(after_path) as f:
+        after = json.load(f)["results"]
+
+    def key(sweep: dict, name: str):
+        r = sweep.get(name, {})
+        return r.get("rows"), r.get("digest")
+
+    differ = []
+    for name in sorted(set(before) | set(after)):
+        a, b = key(before, name), key(after, name)
+        if a != b or a[1] is None:
+            differ.append(name)
+            print(f"DIFF {name}: before={a} after={b}")
+    n_same = len(set(before) | set(after)) - len(differ)
+    print(json.dumps({"identical": n_same, "different": differ}))
+    return 1 if differ else 0
+
+
 def main() -> int:
+    if sys.argv[1:2] == ["--compare"]:
+        return compare(sys.argv[2], sys.argv[3])
+
+    import __spark_entry__ as entry_mod
+
+    from orders_currency_conversion_etl_spark.session import get_spark
+    from tests.oracle_harness import compare_query, rows_to_multiset
+
     sf_dir = os.environ.get("SPARK_GRAFT_SWEEP_DIR", "/root/testdata/sf0.1")
     only = os.environ.get("SPARK_GRAFT_SWEEP_ONLY")
     skip = os.environ.get("SPARK_GRAFT_SWEEP_SKIP")
@@ -78,12 +118,13 @@ def main() -> int:
         t0 = time.perf_counter()
         try:
             if name in oracles:
-                compare_query(spark, sf_dir, queries[name], oracles[name])
+                rows = compare_query(spark, sf_dir, queries[name], oracles[name])
                 status = "pass"
             else:
                 # mirrors the driver's weaker rows-only check for
                 # non-SQL-expressible ops
-                assert queries[name](spark, sf_dir).count() >= 0
+                sdf = queries[name](spark, sf_dir)
+                rows = rows_to_multiset([tuple(r) for r in sdf.collect()], sdf.columns)
                 status = "pass_rows_only"
             n_pass += 1
         except Exception as ex:  # record and continue: one sweep, full picture
@@ -96,7 +137,12 @@ def main() -> int:
             }
             print(f"FAIL {name}: {traceback.format_exc()[-600:]}", file=sys.stderr)
             continue
-        results[name] = {"status": status, "sec": round(time.perf_counter() - t0, 2)}
+        results[name] = {
+            "status": status,
+            "rows": len(rows),
+            "digest": _digest(rows),
+            "sec": round(time.perf_counter() - t0, 2),
+        }
         print(f"{status:14s} {results[name]['sec']:7.2f}s  {name}", flush=True)
 
     summary = {

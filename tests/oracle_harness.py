@@ -64,7 +64,9 @@ def rows_to_multiset(rows, columns):
     return sorted("|".join(canon(row[i]) for i in order) for row in rows)
 
 
-def compare_query(spark, sf_dir: str, spark_fn, oracle_sql: str) -> None:
+def compare_query(spark, sf_dir: str, spark_fn, oracle_sql: str) -> list[str]:
+    """Assert the Spark query equals its DuckDB oracle; return the Spark
+    side's canonical row multiset (see :func:`rows_to_multiset`)."""
     sdf = spark_fn(spark, sf_dir)
     scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]
@@ -88,3 +90,4 @@ def compare_query(spark, sf_dir: str, spark_fn, oracle_sql: str) -> None:
             f"value mismatch ({sum(a != b for a, b in zip(sset, dset))} rows); first diffs:\n"
             + "\n".join(f"  spark={a}\n  duck ={b}" for a, b in diffs)
         )
+    return sset

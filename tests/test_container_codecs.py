@@ -1,16 +1,12 @@
-"""The r14-built GIF LZW codec (operators/gif_codec.py) and the r16
-registrations (staged_r16.py, ACTIVATED at r16 via
-``staged_r16.register_all()`` in ``__spark_entry__``): fuzz roundtrips
-over the container knobs, the decode-only deferred-clear branch,
-cross-checks against the header-only gif_dims walk, and the registered
-queries value-exact through the LIVE registry machinery — exactly what
-the driver runs.
-
-History: before r16 the registration tests here pinned the
-PRE-registration state (names absent from the registry, window
-precomputation); that era's pins are preserved in git history. The
-activation flipped them to the steady-state form, the
-test_staged_r15.py model."""
+"""Codec and container-dispatch operators: the pure GIF LZW codec
+(operators/gif_codec.py) and the video / audio / image header
+dispatches (operators/multimodal.py). Also an sf0.01 value-exact
+check — the scale ``__spark_entry__`` is checked at — of the queries
+built on them and on the gzip/WARC side-car walks
+(operators/archive.py), the row-group footer walk
+(operators/layout.py) and the native queue data source
+(streaming/file_queue.py); ``tests/test_oracle_parity.py`` covers the
+whole registry at sf0.001 only."""
 
 from __future__ import annotations
 
@@ -19,19 +15,41 @@ import struct
 
 import pytest
 
-from orders_currency_conversion_etl_spark import staged_r16
+import __spark_entry__ as entry_mod
 from orders_currency_conversion_etl_spark.operators import multimodal as mm
 from orders_currency_conversion_etl_spark.operators.gif_codec import (
     _lzw_decode,
     _lzw_encode,
     decode_gif,
     encode_gif,
+    encode_gif_animation,
+    gif_frames,
 )
 from orders_currency_conversion_etl_spark.plans import registry
 
 from oracle_harness import compare_query
 
 SF = "/root/testdata/sf0.01"
+
+CONTAINER_QUERIES = [
+    "archive_gzip_members",
+    "archive_warc_gz_index",
+    "archive_warc_gz_fetch",
+    "lake_rowgroup_stats",
+    "queue_source_roundtrip",
+    "multimodal_gif_decode",
+    "multimodal_png_palette_decode",
+    "multimodal_video_dims",
+    "multimodal_audio_info",
+    "multimodal_image_dims",
+]
+
+
+@pytest.mark.parametrize("name", CONTAINER_QUERIES)
+def test_container_query_value_exact_sf001(spark, name):
+    """Value-exact against the FINALIZED oracle through the live
+    registry path (boundary casts on both engines)."""
+    compare_query(spark, SF, registry.QUERIES[name], entry_mod.oracle_sql()[name])
 
 
 def _expected_rgb(palette: bytes, indices: bytes) -> bytes:
@@ -166,72 +184,10 @@ def test_gif_dispatch_reaches_pure_codec():
     assert (w, h) == (8, 5) and rgb == _expected_rgb(pal, idx)
 
 
-STAGED_NAMES = [n for n, _sql, _fn in staged_r16.STAGED]
-
-
-@pytest.fixture(scope="module")
-def entry_mod():
-    import __spark_entry__ as mod  # registers the full 206-name registry
-
-    return mod
-
-
-@pytest.mark.parametrize("name", STAGED_NAMES)
-def test_registered_query_value_exact(spark, entry_mod, name):
-    """Each r16-registered query remains value-exact against its
-    FINALIZED oracle through the live registry path (boundary casts on
-    both engines) — the same compare the driver's hash gate replays."""
-    assert name in registry.QUERIES  # registered by __spark_entry__
-    finalized = entry_mod.oracle_sql()[name]
-    compare_query(spark, SF, registry.QUERIES[name], finalized)
-
-
-def test_register_all_is_idempotent(entry_mod):
-    """register_all() re-applies dict assignments; a second call must
-    not grow the registry or change the registered objects."""
-    before = dict(registry.QUERIES)
-    staged_r16.register_all()
-    assert set(registry.QUERIES) == set(before)
-    for n in STAGED_NAMES:
-        assert n in registry.QUERIES and n in registry.ORACLES
-
-
-def test_r16_registration_landed(entry_mod):
-    """The two r16 names are registered and carried by the pinned
-    ROTATION_R16_NEW list (the r16 window itself retired at the r17
-    flip; it went 50/50 green in CORRECTNESS_r16.json)."""
-    q = entry_mod.queries()
-    for n in STAGED_NAMES:
-        assert n in q, f"{n} missing from the registry"
-    assert sorted(entry_mod.ROTATION_R16_NEW) == sorted(STAGED_NAMES)
-
-
-def test_r16_window_was_sound(entry_mod):
-    """The RETIRED r16 window (historical form, the test_staged_r15
-    model): 10 anchors + 2 registrations + the full 38-name r11
-    staleness cohort = 50 unique registered names, pairwise disjoint,
-    with the capacity inside the 5-round budget."""
-    mod = entry_mod
-    assert len(mod.ANCHORS) == 10
-    cohort = mod.ROTATION_R16_REVALIDATE
-    assert len(cohort) == 38 == len(set(cohort))
-    live = set(mod.queries())
-    assert set(cohort) <= live
-    r16_window = mod.ANCHORS + mod.ROTATION_R16_NEW + cohort
-    assert len(r16_window) == 50 == len(set(r16_window))
-    assert len(live) - len(mod.ANCHORS) <= (50 - len(mod.ANCHORS)) * 5
-
-
 def test_gif_animation_enumeration_roundtrip():
     """gif_frames walks every frame's GCE + descriptor and SEEKS over
     the LZW data (header tier, no decode); decode_gif still decodes
     the FIRST frame of an animation."""
-    from orders_currency_conversion_etl_spark.operators.gif_codec import (
-        decode_gif,
-        encode_gif_animation,
-        gif_frames,
-    )
-
     pal = b"abcdefghijkl"  # 4 colors
     f0 = (6, 4, bytes([p % 4 for p in range(24)]))
     f1 = (4, 4, bytes([3 - (p % 4) for p in range(16)]))
@@ -246,8 +202,6 @@ def test_gif_animation_enumeration_roundtrip():
     assert (w, h, mode) == (6, 4, "RGB")
     assert rgb == b"".join(pal[3 * i : 3 * i + 3] for i in f0[2])
     # single-frame streams enumerate as one frame with default GCE
-    from orders_currency_conversion_etl_spark.operators.gif_codec import encode_gif
-
     single = encode_gif(5, 3, bytes([0] * 15), pal, interlace=True)
     (only,) = gif_frames(single)
     assert (only["width"], only["height"], only["interlaced"]) == (5, 3, True)
@@ -261,12 +215,6 @@ def test_gif_local_color_table_overrides_global():
     """A frame carrying a LOCAL color table maps its pixels through it,
     not the global one — hand-built stream (the encoder only writes
     global tables, so this branch needs an independent fixture)."""
-    from orders_currency_conversion_etl_spark.operators.gif_codec import (
-        _lzw_encode,
-        decode_gif,
-        gif_frames,
-    )
-
     w, h = 4, 2
     idx = bytes([0, 1, 2, 3, 3, 2, 1, 0])
     global_pal = b"GGGgggXXXxxx"  # 4 entries — must NOT be used
@@ -287,3 +235,42 @@ def test_gif_local_color_table_overrides_global():
     assert rgb == b"".join(local_pal[3 * i : 3 * i + 3] for i in idx)
     (frame,) = gif_frames(bytes(out))
     assert frame["local_colors"] == 4
+
+
+def test_video_dims_dispatch_branches_loud():
+    """The dispatch refuses non-video payloads loudly, and each branch
+    reports its own container label (the fixture contract the oracle
+    leans on)."""
+    with pytest.raises(ValueError, match="unrecognized video container"):
+        mm.video_dims(b"\x89PNG\r\n\x1a\n" + b"\x00" * 16)
+    mp4 = mm.encode_mp4_header("isom", 8, 6, 3000, 1000, version=0)
+    assert mm.video_dims(mp4) == ("isom", 8, 6, 3000)
+    avi = mm.encode_avi_header(8, 6, 150, 20_000)
+    assert mm.video_dims(avi) == ("avi", 8, 6, 3000)
+    mkv = mm.encode_mkv_header("webm", 8, 6, 3000.0)
+    assert mm.video_dims(mkv) == ("webm", 8, 6, 3000)
+
+
+def test_audio_info_dispatch_branches_loud():
+    """Each branch reports its own codec label, and non-audio bytes
+    are loud (the fixture contract the oracle leans on)."""
+    with pytest.raises(ValueError, match="unrecognized audio container"):
+        mm.audio_info(b"\x89PNG\r\n\x1a\n")
+    assert mm.audio_info(mm.encode_wav(44100, [0, 1], 1, "mulaw"))[0] == "mulaw"
+    assert mm.audio_info(mm.encode_ogg_id_page("opus", 2, 48000)) == ("opus", 2, 48000)
+    assert mm.audio_info(mm.encode_flac_header(2, 32000)) == ("flac", 2, 32000)
+    assert mm.audio_info(mm.encode_mp3_header(1, 44100, id3_size=9)) == ("mp3", 1, 44100)
+
+
+def test_image_dims_fixture_helpers_parse():
+    """The hand-rolled ICO/BMP/PNM fixture bytes parse through the
+    REAL dispatch with the documented quirks: 256-as-zero ICO bytes,
+    negative top-down BMP height, netpbm comment skip, HEIF thumbnail
+    skip."""
+    assert mm.image_dims(mm._ico_bytes(256, 256)) == (256, 256, "RGBA")
+    assert mm.image_dims(mm._ico_bytes(7, 9)) == (7, 9, "RGBA")
+    assert mm.image_dims(mm._bmp_bytes(5, 4, 8, topdown=True)) == (5, 4, "P")
+    assert mm.image_dims(mm._pnm_bytes(4, 11, 3)) == (11, 3, "1")
+    assert mm.image_dims(mm._pnm_bytes(5, 11, 3)) == (11, 3, "L")
+    assert mm.image_dims(mm._pnm_bytes(6, 11, 3)) == (11, 3, "RGB")
+    assert mm.image_dims(mm.encode_heif_header("avif", [(1, 1), (8, 6)])) == (8, 6, "RGB")

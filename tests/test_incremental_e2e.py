@@ -10,8 +10,6 @@ import datetime as dt
 import os
 import tempfile
 
-from pyspark.sql import functions as F
-
 from orders_currency_conversion_etl_spark.operators.convert import convert_orders
 from orders_currency_conversion_etl_spark.operators.generate import generate_orders
 from orders_currency_conversion_etl_spark.sources.rates import rates_df
@@ -35,12 +33,7 @@ def test_three_rounds_conserve_and_never_duplicate(spark):
     with tempfile.TemporaryDirectory() as work:
         sink = os.path.join(work, "orders_eur")
         # three generator ticks, each a distinct seeded batch
-        batches = [
-            generate_orders(spark, n=200, seed=s, base_time=TS).withColumn(
-                "order_id", F.concat(F.lit(f"b{s}-"), F.col("order_id"))
-            )
-            for s in (1, 2, 3)
-        ]
+        batches = [generate_orders(spark, n=200, seed=s, base_time=TS) for s in (1, 2, 3)]
         seen_total = 0
         accumulated = None
         for b in batches:

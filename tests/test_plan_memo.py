@@ -3,10 +3,11 @@ pagerank iteration plan shape.
 
 The memo (sources/catalog.py::session_memo) reuses the ANALYZED, lazy
 DataFrame — file listing + parquet footer schema read — never any
-computed data; these tests pin the reuse semantics, the keying, and
-the opt-out. The pagerank pin asserts the r18 exchange-elimination:
-the per-iteration contribution aggregation must consume the persisted
-dst-partitioning instead of reshuffling.
+computed data; these tests pin the reuse semantics and the keying,
+including invalidation when the table's files change. The pagerank
+pin asserts the r18 exchange-elimination: the per-iteration
+contribution aggregation must consume the persisted dst-partitioning
+instead of reshuffling.
 """
 
 from __future__ import annotations
@@ -37,11 +38,37 @@ def test_load_table_parallel_memoized_separately(spark):
     assert par1 is not plain, "parallel variant keys its own memo entry"
 
 
-def test_memo_env_opt_out(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_NO_PLAN_MEMO", "1")
-    a = catalog.load_table(spark, SF, "nation")
-    b = catalog.load_table(spark, SF, "nation")
-    assert a is not b, "opt-out must disable plan reuse"
+def _region_dir_table(spark, sf: str) -> "tuple[str, object]":
+    """Copy the fixture's 5-row region table into ``sf`` as a directory
+    of part files and load it once (memoized)."""
+    table = os.path.join(sf, "region.parquet")
+    src = spark.read.parquet(os.path.join(SF, "region.parquet"))
+    src.write.parquet(table)
+    first = catalog.load_table(spark, sf, "region")
+    assert first.count() == 5
+    assert catalog.load_table(spark, sf, "region") is first  # unchanged: reused
+    return table, src
+
+
+def test_memo_sees_part_file_appended_within_session(spark, tmp_path):
+    """A part file appended after the table was loaded shows up in the
+    next load instead of being silently missed by the memoized plan."""
+    sf = str(tmp_path)
+    table, src = _region_dir_table(spark, sf)
+    src.limit(1).write.mode("append").parquet(table)
+    assert catalog.load_table(spark, sf, "region").count() == 6
+    assert catalog.load_table_parallel(spark, sf, "region").count() == 6
+
+
+def test_memo_sees_table_rewritten_within_session(spark, tmp_path):
+    """A table directory rewritten after it was loaded loads its new
+    files instead of failing on the deleted ones
+    (FAILED_READ_FILE.FILE_NOT_EXIST from the memoized plan)."""
+    sf = str(tmp_path)
+    table, src = _region_dir_table(spark, sf)
+    src.limit(2).write.mode("overwrite").parquet(table)
+    assert catalog.load_table(spark, sf, "region").count() == 2
+    assert catalog.load_table_parallel(spark, sf, "region").count() == 2
 
 
 def test_memoized_plan_rereads_data_not_results(spark, tmp_path):

@@ -17,8 +17,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from orders_currency_conversion_etl_spark.operators.convert import convert_orders
+from orders_currency_conversion_etl_spark.operators.generate import generate_orders
 from orders_currency_conversion_etl_spark.operators.incremental import unprocessed
-from orders_currency_conversion_etl_spark.sources.rates import normalize_usd_rates_to_eur
+from orders_currency_conversion_etl_spark.sources.rates import normalize_usd_rates_to_eur, rates_df
 
 CURRENCIES = ["EUR", "USD", "JPY", "GBP", "XXX"]  # XXX never in rates => 1.0 passthrough
 
@@ -120,6 +121,27 @@ def test_incremental_idempotency(spark, batch):
     sink = first.select("order_id")
     second = unprocessed(src, sink, key="order_id")
     assert second.count() == 0
+
+
+@settings(max_examples=6, deadline=None)
+@given(
+    seeds=st.lists(st.integers(min_value=0, max_value=10**6), min_size=2, max_size=2, unique=True),
+    n_a=st.integers(min_value=1, max_value=30),
+    n_b=st.integers(min_value=1, max_value=30),
+)
+def test_seeded_batches_drain_exactly_once(spark, seeds, n_a, n_b):
+    """Two generator batches from distinct seeds: once batch A is
+    converted into the sink, unprocessed(A ∪ B, sink) yields exactly
+    B's ids; once those are converted too, it yields nothing."""
+    a = generate_orders(spark, n=n_a, seed=seeds[0], base_time=TS)
+    b = generate_orders(spark, n=n_b, seed=seeds[1], base_time=TS)
+    both = a.unionByName(b)
+    rates = rates_df(spark)
+    sink = convert_orders(a, rates, TS).select("order_id")
+    delta = unprocessed(both, sink)
+    assert {r.order_id for r in delta.collect()} == {r.order_id for r in b.collect()}
+    sink = sink.unionByName(convert_orders(delta, rates, TS).select("order_id"))
+    assert unprocessed(both, sink).count() == 0
 
 
 # --------------------------------------------------------------------------

@@ -94,6 +94,19 @@ def test_generator_is_deterministic(spark):
     assert all("@example.com" in r.customer_email for r in a)
 
 
+def test_generator_order_ids_follow_the_seed(spark):
+    """order_id derives from md5(seed:id): distinct seeds give disjoint
+    id sets, the same seed gives the same ids."""
+
+    def ids(seed: int) -> set:
+        return {r.order_id for r in generate_orders(spark, n=300, seed=seed).collect()}
+
+    a, b = ids(1), ids(2)
+    assert len(a) == len(b) == 300
+    assert not a & b
+    assert ids(1) == a
+
+
 # --------------------------------------------------------------------------
 # Real-transport HTTP e2e over a loopback server (upgrades S2/S3/S7
 # from injected-transport unit tests to the actual urllib path)
