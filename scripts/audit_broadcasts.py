@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -30,48 +29,31 @@ sys.path.insert(0, REPO)
 
 import __spark_entry__ as entry_mod  # noqa: E402
 
+from orders_currency_conversion_etl_spark.plans.walk import cls, counts, nodes, scan_paths  # noqa: E402
 from orders_currency_conversion_etl_spark.session import get_spark  # noqa: E402
 
 FACT_TABLES = ("lineitem", "orders", "events", "documents", "embeddings")
 
 #: operators under a BroadcastExchange that bound its size regardless
 #: of the scanned table's size
-SHRINKERS = re.compile(
-    r"HashAggregate|SortAggregate|ObjectHashAggregate|CollectLimit"
-    r"|GlobalLimit|LocalLimit|TakeOrderedAndProject|Deduplicate"
-)
+SHRINKERS = {
+    "HashAggregateExec", "SortAggregateExec", "ObjectHashAggregateExec", "CollectLimitExec",
+    "GlobalLimitExec", "LocalLimitExec", "TakeOrderedAndProjectExec", "StreamingDeduplicateExec",
+}
 
 
-def _indent(line: str) -> int:
-    body = line.lstrip()
-    return len(line) - len(body)
-
-
-def audit_plan(plan: str) -> list[dict]:
-    """Flag BroadcastExchange subtrees that scan a fact table without a
-    shrinking operator in between (tree-format `explain` string)."""
-    lines = [l for l in plan.splitlines() if l.strip()]
+def audit_plan(plan) -> list[dict]:
+    """Flag BroadcastExchange subtrees of ``plan`` (a DataFrame or a
+    physical plan node) that scan a fact table without a shrinking
+    operator in between."""
     flags = []
-    for i, line in enumerate(lines):
-        if "BroadcastExchange" not in line:
+    for exchange in nodes(plan, "BroadcastExchangeExec"):
+        if SHRINKERS & set(counts(exchange)):
             continue
-        d = _indent(line)
-        subtree = []
-        for nxt in lines[i + 1 :]:
-            if _indent(nxt) <= d and (":-" in nxt or "+-" in nxt):
-                break
-            subtree.append(nxt)
-        sub = "\n".join(subtree)
-        facts = sorted(
-            {
-                t
-                for t in FACT_TABLES
-                for m in re.finditer(r"FileScan parquet[^\n]*", sub)
-                if f"/{t}.parquet" in m.group(0) or f"{t}.parquet]" in m.group(0)
-            }
-        )
-        if facts and not SHRINKERS.search(sub):
-            flags.append({"tables": facts, "exchange_line": line.strip()[:120]})
+        paths = [p for scan in nodes(exchange, "FileSourceScanExec") for p in scan_paths(scan)]
+        facts = sorted({t for t in FACT_TABLES for p in paths if f"/{t}.parquet" in p})
+        if facts:
+            flags.append({"tables": facts, "mode": cls(exchange.mode()).rstrip("$")})
     return flags
 
 
@@ -169,9 +151,7 @@ def main() -> int:
     errors: dict[str, str] = {}
     for name, fn in sorted(entry_mod.queries().items()):
         try:
-            df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            flags = audit_plan(plan)
+            flags = audit_plan(fn(spark, sf_dir))
             if flags:
                 just = ADJUDICATIONS.get(name)
                 for f in flags:

@@ -1,6 +1,7 @@
-"""Regenerate PLANS.md: the formatted physical plan of every headline
-query at sf0.001, annotated with the scan-level evidence that the
-scale properties hold (pushed filters, read schemas, join strategies).
+"""Regenerate PLANS.md: the physical plan of every headline query at
+sf0.001, walked with plans/walk.py and annotated with the evidence
+that the scale properties hold (filtered scans, join strategies,
+exchange counts).
 
 With ``--out DIR TAG``, instead write the full ``.explain("formatted")``
 of each named query (default: the headline set) to
@@ -24,26 +25,27 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__  # noqa: F401  (registers every query)
 
 from orders_currency_conversion_etl_spark.plans import registry
+from orders_currency_conversion_etl_spark.plans.walk import counts, exchanges, hash_shuffles, walk
 from orders_currency_conversion_etl_spark.session import get_spark
 
 import bench
 
 SF_DIR = "/root/testdata/sf0.001"
 
-_INTERESTING = re.compile(
-    r"BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoop"
-    r"|TakeOrderedAndProject|HashAggregate|ObjectHashAggregate|SortAggregate"
-    r"|Exchange|WholeStageCodegen|PushedFilters: \[[^\]]"
-)
+_INTERESTING = re.compile(r"Join|Aggregate|Exchange|TakeOrderedAndProject|WholeStageCodegen")
 
 
-def _summarize(plan: str) -> str:
-    """Keep the structurally interesting lines; full plans are pages of
-    attribute lists that drown the signal."""
+def _summarize(df, cached: bool = True) -> str:
+    """One line per structurally interesting node (joins, aggregates,
+    exchanges, codegen spans, and file scans that received a filter),
+    indented by depth; full plans are pages of attribute lists that
+    drown the signal."""
     keep = []
-    for line in plan.splitlines():
-        if _INTERESTING.search(line):
-            keep.append(line.rstrip()[:160])
+    for name, depth, node in walk(df, cached):
+        if _INTERESTING.search(name) or (
+            name == "FileSourceScanExec" and not node.dataFilters().isEmpty()
+        ):
+            keep.append(("   " * depth + "+- " + node.simpleString(25))[:160])
     return "\n".join(keep) if keep else "(scan/project only — no joins, aggs, or exchanges)"
 
 
@@ -54,9 +56,11 @@ def main() -> None:
         "# PLANS — physical plans of the headline queries",
         "",
         "Generated by `scripts/dump_plans.py` (sf0.001, pre-execution AQE",
-        "plans). Lines are filtered to join strategies, aggregates,",
-        "exchanges, codegen spans, and pushed filters — the properties",
-        "SCALE.md argues from and tests/test_plan_quality.py asserts.",
+        "plans). One line per plan node, in the order and depth of",
+        "`plans/walk.py` (a cached plan is shown once), filtered to join",
+        "strategies, aggregates, exchanges, codegen spans, and file scans",
+        "that received a filter — the properties SCALE.md argues from and",
+        "tests/test_plan_quality.py asserts.",
         "",
     ]
     #: non-headline queries whose plan shape carries a 100 TB claim
@@ -81,16 +85,14 @@ def main() -> None:
     )
     for name in bench.HEADLINE + extras:
         df = registry.QUERIES[name](spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        n_shuffles = plan.count("Exchange hashpartitioning")
-        n_bhj = plan.count("BroadcastHashJoin")
         out += [
             f"## {name}",
             "",
-            f"hash exchanges: {n_shuffles} · broadcast joins: {n_bhj}",
+            f"hash exchanges: {hash_shuffles(df)}"
+            f" · broadcast joins: {counts(df)['BroadcastHashJoinExec']}",
             "",
             "```",
-            _summarize(plan),
+            _summarize(df),
             "```",
             "",
         ]
@@ -104,25 +106,22 @@ def main() -> None:
             )
 
             body = pagerank_loop_body(spark, SF_DIR)
-            bplan = body._jdf.queryExecution().executedPlan().toString()
             # The loop reads PERSISTED state (edges⋈deg, materialized by
-            # the deg.count() in _pagerank_state); everything printed
-            # under InMemoryTableScan is the one-time state-build
-            # lineage, not per-iteration work — cut there so the
-            # exchange count reflects what each iteration actually runs.
-            iter_part = bplan.split("InMemoryTableScan", 1)[0]
+            # the deg.count() in _pagerank_state); the cached relation's
+            # plan is the one-time state-build lineage, not per-iteration
+            # work — leave it out so the exchange count reflects what
+            # each iteration actually runs.
             out += [
                 "### pagerank_parts — one un-truncated loop-body iteration",
                 "",
-                "(plan truncated at the InMemoryTableScan of the persisted",
-                "edge⋈degree state; the build below that line runs once, not",
-                "per iteration)",
+                "(cached plans left out: the build of the persisted",
+                "edge⋈degree state runs once, not per iteration)",
                 "",
-                f"hash exchanges: {iter_part.count('Exchange hashpartitioning')}"
-                f" · broadcast joins: {iter_part.count('BroadcastHashJoin')}",
+                f"hash exchanges: {hash_shuffles(body, cached=False)}"
+                f" · broadcast joins: {counts(body, cached=False)['BroadcastHashJoinExec']}",
                 "",
                 "```",
-                _summarize(iter_part),
+                _summarize(body, cached=False),
                 "```",
                 "",
             ]
@@ -148,7 +147,7 @@ def dump_formatted(out_dir: str, tag: str, names: "list[str]") -> None:
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
-        print(f"wrote {path} ({plan.count('Exchange')} Exchange mentions)")
+        print(f"wrote {path} ({exchanges(df)} exchange nodes)")
     spark.stop()
 
 

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from orders_currency_conversion_etl_spark.operators import bloom
+from orders_currency_conversion_etl_spark.plans.walk import counts, expression_counts
 
 SF = "/root/testdata/sf0.01"
 
@@ -65,10 +66,10 @@ def test_bloom_hashing_is_jvm_side(spark):
     num_bits, k = bloom.bloom_params(100, 0.01)
     bitmap = bloom.build_bloom(fact, "key", num_bits, k)
     pruned = bloom.prune_with_bloom(fact, "key", bitmap, num_bits, k)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan  # the vectorized bit test
-    assert "md5" in plan  # hashing stayed in the JVM projection
-    assert "BatchEvalPython" not in plan  # never row-at-a-time Python
+    c = counts(pruned)
+    assert "ArrowEvalPythonExec" in c  # the vectorized bit test
+    assert "Md5" in expression_counts(pruned)  # hashing stayed in the JVM projection
+    assert "BatchEvalPythonExec" not in c  # never row-at-a-time Python
 
 
 def test_bloom_semi_join_exact_vs_plain_semi(spark):
@@ -226,7 +227,7 @@ def test_unprocessed_at_scale_bloom_modes(spark):
     }
     assert on == off
     auto = incremental.unprocessed_at_scale(src, sink, key="order_id", bloom="auto")
-    assert "ArrowEvalPython" not in auto._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPythonExec" not in counts(auto)
     assert {r["order_id"] for r in auto.collect()} == off
     empty = sink.where(F.lit(False))
     assert incremental.unprocessed_at_scale(
@@ -248,6 +249,6 @@ def test_unprocessed_at_scale_auto_accepts_above_threshold(spark):
         src, sink, key="order_id", bloom="auto",
         sink_n_keys=incremental.BLOOM_MIN_SINK_KEYS + 1,
     )
-    plan = forced._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan and "Union" in plan
+    c = counts(forced)
+    assert "ArrowEvalPythonExec" in c and "UnionExec" in c
     assert forced.count() == 3_000 - sink.count()

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import types as T
 
 from orders_currency_conversion_etl_spark import schemas
+from orders_currency_conversion_etl_spark.plans.walk import expressions, nodes
 from orders_currency_conversion_etl_spark.sources import catalog, formats
 
 SF = "/root/testdata/sf0.001"
@@ -57,11 +58,9 @@ def test_ingest_one_hop_partitions_for_pruning(spark):
         formats.to_parquet(landed, d + "/lake", partition_by=["o_orderstatus"])
         back = spark.read.parquet(d + "/lake")
         assert back.count() == src.count()
-        plan = (
-            back.filter(back.o_orderstatus == "F")
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "o_orderstatus" in plan.split("PartitionFilters:")[1][:200]
+        (scan,) = nodes(back.filter(back.o_orderstatus == "F"), "FileSourceScanExec")
+        pf = expressions(scan.partitionFilters())
+        assert "o_orderstatus" in {e.name() for c, e in pf if c == "AttributeReference"}
 
 
 def test_failfast_surfaces_malformed_rows(spark):

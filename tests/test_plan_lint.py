@@ -12,13 +12,15 @@ from __future__ import annotations
 import pytest
 
 from orders_currency_conversion_etl_spark.plans.registry import QUERIES
+from orders_currency_conversion_etl_spark.plans.walk import counts, exchanges
 import __spark_entry__  # noqa: F401  (registers every query)
 
 SF = "/root/testdata/sf0.001"
 
-#: Measured headroom: the widest plan today is the curation pipeline
-#: at 16 exchanges; iterative ops (pagerank, connected components)
-#: stay tiny because they truncate lineage per iteration (SCALE.md).
+#: Measured headroom: the widest plan today is knn_ivf_pq at 15
+#: exchange nodes (7 shuffle, 8 broadcast); iterative ops (pagerank,
+#: connected components) stay tiny because they truncate lineage per
+#: iteration (SCALE.md).
 DEFAULT_EXCHANGE_CAP = 20
 
 
@@ -28,19 +30,19 @@ def _cases():
 
 @pytest.mark.parametrize("name", _cases())
 def test_plan_has_no_scale_smells(spark, name):
-    # Cold-cache plans only: cached intermediates left by earlier tests
-    # render as InMemoryRelation dumps that re-print their child plans,
-    # inflating (and double-counting) the exchange tally.
+    # Cold-cache plans only: a cached intermediate left by an earlier
+    # test would replace part of this query's own plan.
     spark.catalog.clearCache()
-    plan = QUERIES[name](spark, SF)._jdf.queryExecution().executedPlan().toString()
+    df = QUERIES[name](spark, SF)
+    c = counts(df)
     # a non-broadcast cartesian product is O(n*m) shuffle-side — never
     # acceptable; broadcast nested-loop (range joins vs tiny spines) is
-    assert "CartesianProduct" not in plan, f"{name} plans a cartesian product"
+    assert "CartesianProductExec" not in c, f"{name} plans a cartesian product"
     # Python boundary policy (SCALE.md): Python only via Arrow batches
     # (ArrowEvalPython / mapInPandas / applyInPandas) — a row-at-a-time
     # BatchEvalPython node is 10-100x slower and never acceptable.
-    assert "BatchEvalPython" not in plan, f"{name} uses a row-at-a-time Python UDF"
-    n_ex = plan.count("Exchange ")
+    assert "BatchEvalPythonExec" not in c, f"{name} uses a row-at-a-time Python UDF"
+    n_ex = exchanges(df)
     assert n_ex <= DEFAULT_EXCHANGE_CAP, (
         f"{name} plans {n_ex} exchanges (cap {DEFAULT_EXCHANGE_CAP})"
     )
@@ -86,10 +88,7 @@ def test_output_schema_is_driver_safe(spark, name):
     )
 
 
-def test_broadcast_audit_parser_flags_unshrunk_fact_scan():
-    """Pure-parser check for scripts/audit_broadcasts.py: a broadcast
-    subtree scanning a fact table flags, while aggregated/limited
-    subtrees and dim-table scans do not."""
+def _audit_module():
     import importlib.util
     import os
 
@@ -99,32 +98,35 @@ def test_broadcast_audit_parser_flags_unshrunk_fact_scan():
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
+    return mod
 
-    flagged = """
-+- BroadcastHashJoin [k], [k2], Inner, BuildRight
-   :- Scan stuff
-   +- BroadcastExchange HashedRelationBroadcastMode(...)
-      +- Filter isnotnull(o_custkey#1L)
-         +- FileScan parquet [o_custkey#1L] Location: InMemoryFileIndex[file:/x/orders.parquet]
-"""
-    assert mod.audit_plan(flagged), "raw fact scan under broadcast must flag"
 
-    shrunk = flagged.replace(
-        "Filter isnotnull(o_custkey#1L)", "HashAggregate(keys=[o_custkey#1L])"
-    )
-    assert not mod.audit_plan(shrunk), "aggregated subtree must not flag"
+def test_broadcast_audit_parser_flags_unshrunk_fact_scan(spark):
+    """scripts/audit_broadcasts.py on real plans: a broadcast subtree
+    scanning a fact table flags, while an aggregated subtree, a
+    dim-table broadcast and a fact scan in a sibling branch do not."""
+    from pyspark.sql import functions as F
 
-    dim = flagged.replace("orders.parquet", "nation.parquet")
-    assert not mod.audit_plan(dim), "dim-table broadcast must not flag"
+    audit_plan = _audit_module().audit_plan
+    orders = spark.read.parquet(f"{SF}/orders.parquet")
+    customer = spark.read.parquet(f"{SF}/customer.parquet")
+    nation = spark.read.parquet(f"{SF}/nation.parquet")
+    by_cust = F.col("c_custkey") == F.col("o_custkey")
 
-    # sibling subtree outside the exchange must not leak into the scan
-    sibling = """
-+- BroadcastHashJoin [k], [k2], Inner, BuildRight
-   :- BroadcastExchange Mode(...)
-   :  +- FileScan parquet [n_name#2] Location: InMemoryFileIndex[file:/x/nation.parquet]
-   +- FileScan parquet [o_custkey#1L] Location: InMemoryFileIndex[file:/x/orders.parquet]
-"""
-    assert not mod.audit_plan(sibling), "fact scan OUTSIDE the exchange must not flag"
+    raw = customer.join(F.broadcast(orders), by_cust)
+    assert audit_plan(raw) == [
+        {"tables": ["orders"], "mode": "HashedRelationBroadcastMode"}
+    ], "raw fact scan under broadcast must flag"
+
+    shrunk = customer.join(F.broadcast(orders.groupBy("o_custkey").count()), by_cust)
+    assert not audit_plan(shrunk), "aggregated subtree must not flag"
+
+    dim = customer.join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
+    assert not audit_plan(dim), "dim-table broadcast must not flag"
+
+    sibling = orders.join(F.broadcast(nation), F.col("o_custkey") == F.col("n_nationkey"))
+    assert "BroadcastExchangeExec" in counts(sibling)
+    assert not audit_plan(sibling), "fact scan OUTSIDE the exchange must not flag"
 
 
 def test_doc_registry_counts_match_live_registry():
@@ -168,7 +170,6 @@ def test_broadcast_audit_fully_adjudicated():
     CI-gate pattern that fixed the doc-count drift above. Also pins
     map hygiene: every ADJUDICATIONS key must still be a registered
     query (no orphan rationales surviving renames)."""
-    import importlib.util
     import json
     import os
 
@@ -186,12 +187,7 @@ def test_broadcast_audit_fully_adjudicated():
             assert fl.get("reviewed") is True, f"{qname}: unreviewed flag"
             assert fl.get("justification"), f"{qname}: empty justification"
 
-    spec = importlib.util.spec_from_file_location(
-        "audit_broadcasts",
-        os.path.join(root, "scripts", "audit_broadcasts.py"),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = _audit_module()
 
     import __spark_entry__ as entry
 

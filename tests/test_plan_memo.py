@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 
+from orders_currency_conversion_etl_spark.plans.walk import counts
 from orders_currency_conversion_etl_spark.sources import catalog
 
 SF = "/root/testdata/sf0.001"
@@ -99,22 +100,13 @@ def test_pagerank_iteration_needs_no_exchange(spark):
         contrib_src.write.mode("overwrite").format("noop").save()
         step = graph._pagerank_step(contrib_src, ranks, n)
         step.write.mode("overwrite").format("noop").save()
-        executed = step._jdf.queryExecution().executedPlan().toString()
-        # Only the operators ABOVE the cached scan are the iteration's
-        # own; the InMemoryRelation's build lineage legitimately
+        # Only the operators outside the cached relations are the
+        # iteration's own; the cache's build plan legitimately
         # contains the one-time edge-dedup exchange.
-        above_cache = executed.splitlines()
-        cut = next(
-            i for i, line in enumerate(above_cache) if "InMemoryTableScan" in line
-        )
-        shuffle_exchanges = [
-            line
-            for line in above_cache[:cut]
-            if "Exchange" in line and "BroadcastExchange" not in line
-        ]
-        assert not shuffle_exchanges, (
-            "pagerank iteration re-shuffles despite dst-partitioned edges:\n"
-            + "\n".join(shuffle_exchanges)
+        c = counts(step, cached=False)
+        assert "InMemoryTableScanExec" in c
+        assert "ShuffleExchangeExec" not in c, (
+            f"pagerank iteration re-shuffles despite dst-partitioned edges: {c}"
         )
     finally:
         key = (spark.sparkContext.applicationId, SF)
